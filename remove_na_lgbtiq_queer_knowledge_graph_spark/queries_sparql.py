@@ -259,6 +259,45 @@ def _static_triples(spark: SparkSession) -> DataFrame:
 _KG_MEMO: dict[tuple, DataFrame] = {}
 
 
+class EmptyPredicateError(ValueError):
+    """A triples frame holds a null or empty-string predicate.  The
+    predicate-partitioned store cannot keep either: both land in the
+    ``__HIVE_DEFAULT_PARTITION__`` directory and read back as null, so
+    an empty predicate would silently turn into an unbound one."""
+
+
+def _write_store(df: DataFrame, d: str) -> DataFrame:
+    """Write ``df`` to a parquet store at ``d`` and return the frame
+    that scans it.
+
+    A triples frame (``subject``/``predicate``/``object`` columns) is
+    vertically partitioned: one ``predicate=<iri>`` directory per
+    predicate, one zstd file per directory, rows sorted by subject.  A
+    bound-predicate pattern filters ``predicate == <iri>``, which
+    Catalyst turns into a ``PartitionFilters`` prune, so each pattern
+    scan lists and reads one directory instead of every file of the
+    store.  The read passes the frame's own schema, so nothing is
+    inferred (partition values stay strings, an IRI is never parsed as
+    a number or date), and re-selects its columns, because a partition
+    column is read back last: consumers see the same names, order and
+    types as the frame that was written.
+
+    Any other frame keeps the flat write."""
+    spark = df.sparkSession
+    if not {"subject", "predicate", "object"} <= set(df.columns):
+        df.write.mode("overwrite").parquet(d)
+        return spark.read.parquet(d)
+    (df.repartition("predicate")
+       .sortWithinPartitions("predicate", "subject")
+       .write.mode("overwrite").option("compression", "zstd")
+       .partitionBy("predicate").parquet(d))
+    # Hive-style partitioning writes null AND "" values to this directory
+    if os.path.isdir(os.path.join(d, "predicate=__HIVE_DEFAULT_PARTITION__")):
+        raise EmptyPredicateError(
+            f"triples store {d} has null or empty-string predicates")
+    return spark.read.schema(df.schema).parquet(d).select(*df.columns)
+
+
 def kg_memo(key: str, spark: SparkSession, sf_dir: str, build,
             store: bool = True) -> DataFrame:
     """Session-scoped memo for materialized KG fixtures: the triples a
@@ -268,6 +307,10 @@ def kg_memo(key: str, spark: SparkSession, sf_dir: str, build,
     dozens of rebuilds.  Keyed by (session, sf_dir, source mtimes) —
     like spec.t's table memo, regenerated testdata invalidates the
     checkpointed fixture instead of serving it stale.
+
+    ``store=True`` memoizes the frame that reads back a parquet store
+    of the built frame (``_write_store``: partitioned by predicate for
+    triples frames, flat otherwise).
 
     ``store=False`` memoizes the built frame WITHOUT writing it to a
     parquet store — for derived fixtures that are unions of frames
@@ -296,8 +339,8 @@ def kg_memo(key: str, spark: SparkSession, sf_dir: str, build,
         # row set on every scan, and a BGP compiles to one scan per
         # triple pattern — companions_and_relations.rq reads the KG 69
         # times per run, ~0.5 s of pure deserialization each.  A
-        # parquet-backed store gives each pattern scan predicate
-        # pushdown, column pruning and whole-stage codegen (measured
+        # parquet-backed store gives each pattern scan partition
+        # pruning, column pruning and whole-stage codegen (measured
         # 2.5 s → 1.4 s on the flagship query).  This is also the
         # reference's own shape — its KG materializes to a file
         # (create-rdf.py) before any query runs.
@@ -305,28 +348,25 @@ def kg_memo(key: str, spark: SparkSession, sf_dir: str, build,
         if store:
             from .spec import scratch_dir
 
-            d = os.path.join(scratch_dir(f"kg_{key}_"), "t")
-            df.write.mode("overwrite").parquet(d)
-            df = spark.read.parquet(d)
+            df = _write_store(df, os.path.join(scratch_dir(f"kg_{key}_"), "t"))
         _KG_MEMO[k] = df
     return _KG_MEMO[k]
 
 
 def factgrid_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The FactGrid-shaped KG, materialized once per session+sf (a BGP
-    scans it once per pattern — without materialization every pattern
-    re-runs the full union of source scans)."""
-    # coalesce before the checkpoint: the fixture KG is ~1e5 rows, and
-    # 36-join BGP plans pay per-partition task overhead on every scan of
-    # the cached frame (measured 2.6x on companions_and_relations).  At
-    # real triple volume the natural partitioning (or subject bucketing)
-    # stands — partition count should track data size.
+    """The FactGrid-shaped KG, materialized once per session+sf into a
+    predicate-partitioned parquet store (``kg_memo``): a BGP scans the
+    KG once per triple pattern, and each bound-predicate scan reads
+    only its predicate's directory.  Without a store every pattern
+    would re-run the full union of source scans.  The store's file
+    count follows its predicates (one file each), not a fixed
+    partition count."""
     # no _cache around the build: kg_memo consumes it exactly once (the
     # parquet write IS the materialization); a localCheckpoint first
     # would be a redundant extra pass
     return kg_memo("factgrid", spark, sf_dir, lambda: (
         materialize(_factgrid_tables(spark, sf_dir), factgrid_maps())
-        .unionByName(_static_triples(spark)).coalesce(8)
+        .unionByName(_static_triples(spark))
     ))
 
 

@@ -477,7 +477,7 @@ def _companions_bundle(spark: SparkSession, sf_dir: str) -> DataFrame:
             .unionByName(tag(db_part.unionByName(db_static), "db"))
         )
         # no _cache: kg_memo's parquet write IS the materialization
-        return bundle.coalesce(8)
+        return bundle
 
     return kg_memo("companions_bundle", spark, sf_dir, build)
 
@@ -695,7 +695,7 @@ def _year_events_kg(spark: SparkSession, sf_dir: str) -> DataFrame:
         static = spark.createDataFrame(
             [(FG + "Q401", FGT + "P3", FG + "Q9", None, None)],
             _TRIPLE_SCHEMA)
-        return frame.unionByName(static).coalesce(8)
+        return frame.unionByName(static)
 
     return kg_memo("year_events", spark, sf_dir, build)
 

@@ -1915,6 +1915,62 @@ def test_curation_filter_equivalence(spark):
     assert declared == rewritten == {4, 6, 8, 9}
 
 
+
+def test_curation_matches_composed_operators(spark, tmp_path):
+    """corpus_curation's fused plan (bound-token survivor filter, then
+    per-language scoring on survivors) returns exactly what the composed
+    operators/text.py pipeline returns: exact_keep_first → lang_id →
+    quality_features → keep non-'low' tier, non-'unknown' language.  The
+    generated corpus covers exact duplicates, NULL and blank text, the
+    20/50-token tier edges, stopword-free text and cross-language ties."""
+    import random
+
+    from remove_na_lgbtiq_queer_knowledge_graph_spark.operators.dedup import (
+        exact_keep_first,
+    )
+    from remove_na_lgbtiq_queer_knowledge_graph_spark.operators.text import (
+        STOPWORDS,
+        lang_id,
+        quality_features,
+    )
+    from remove_na_lgbtiq_queer_knowledge_graph_spark.queries_llm import (
+        corpus_curation_q,
+    )
+
+    rng = random.Random(7)
+    words = sorted({w for ws in STOPWORDS.values() for w in ws}) \
+        + ["x", "Graph", "queer", "archiv", "n\u00e4he", "ok."]
+    texts = [None, "", "   "]
+    for _ in range(300):
+        n = rng.choice([0, 1, 19, 20, 21, 49, 50, 51, rng.randrange(80)])
+        stop_p = rng.choice([0.0, 0.05, 0.3])
+        texts.append(" ".join(
+            rng.choice(words[:-6]) if rng.random() < stop_p
+            else rng.choice(words[-6:]) for _ in range(n)))
+    texts += rng.sample(texts[3:], 40)  # exact duplicates, later ids
+    docs = spark.createDataFrame(
+        [(i, tx, None, "gen", len(tx) if tx is not None else None)
+         for i, tx in enumerate(texts)],
+        "doc_id long, text string, lang string, source string, "
+        "n_chars long")
+    docs.write.parquet(str(tmp_path / "documents.parquet"))
+
+    got = corpus_curation_q(spark, str(tmp_path))
+    composed = (
+        quality_features(lang_id(exact_keep_first(docs, "doc_id", "text"),
+                                 "text"),
+                         "doc_id", "text", keep=["predicted_lang"])
+        .filter((F.col("quality_tier") != "low")
+                & (F.col("predicted_lang") != "unknown"))
+        .select(*got.columns)
+    )
+    assert got.dtypes == composed.dtypes
+    rows = sorted(got.collect())
+    assert rows == sorted(composed.collect())
+    # the corpus reaches every kept tier and more than one language
+    assert {r.quality_tier for r in rows} == {"medium", "high"}
+    assert len({r.predicted_lang for r in rows}) > 1
+
 def test_unicode_lowercase_portable_across_engines(spark):
     """Round-13 review fix (same class as the \\x0b finding): Java's
     FULL lowercase mapping (contextual final sigma, İ → i+U+0307)

@@ -1620,3 +1620,125 @@ SELECT ?s WHERE {
     # label service's QID fallback) -> DESC is "c" > "Bob" > "Alice"
     assert rows == ["http://ex.org/c", "http://ex.org/b", "http://ex.org/a"]
     assert set(df.columns) == {"s"}
+
+
+# -- predicate-partitioned KG store (queries_sparql.kg_memo) ------------------
+
+# predicates a Hive-style partition path must escape or carry raw; "0042"
+# would be read back as an integer if partition types were inferred
+_ODD_PREDICATES = (
+    "http://ex.org/p#frag",
+    "http://ex.org/100%25done",
+    "http://ex.org/a/b/c",
+    "urn:ex:colon",
+    "http://ex.org/k=v",
+    "http://ex.org/with space",
+    "http://ex.org/straße/名前",
+    "0042",
+)
+_TRIPLE_DDL = ("subject string, predicate string, object string, "
+               "lang string, dtype string")
+
+
+def _stored(spark, tmp_path, key, build):
+    """A kg_memo store of ``build()`` under a key no other test uses."""
+    from remove_na_lgbtiq_queer_knowledge_graph_spark.queries_sparql import (
+        kg_memo,
+    )
+
+    return kg_memo(key, spark, str(tmp_path), build)
+
+
+def _fields(df):
+    return [(f.name, f.dataType) for f in df.schema.fields]
+
+
+def test_kg_store_round_trips_schema_and_rows(spark, tmp_path):
+    from collections import Counter
+
+    rows = [
+        (f"http://ex.org/s{i}", p, f"o{i}", lang, dtype)
+        for i, p in enumerate(_ODD_PREDICATES)
+        for lang, dtype in ((None, None), ("de", None),
+                            (None, "http://www.w3.org/2001/XMLSchema#date"))
+    ]
+    rows.append(rows[0])  # a duplicate triple stays a duplicate
+    frame = spark.createDataFrame(rows, _TRIPLE_DDL)
+    store = _stored(spark, tmp_path, "odd_predicates", lambda: frame)
+
+    assert store.columns == frame.columns
+    assert _fields(store) == _fields(frame)
+    assert (Counter(tuple(r) for r in store.collect())
+            == Counter(tuple(r) for r in frame.collect()))
+    # one predicate=<iri> directory and one file per predicate
+    files = store.inputFiles()
+    assert len(files) == len(_ODD_PREDICATES)
+    assert all("/predicate=" in f for f in files)
+
+
+@pytest.mark.parametrize("predicate", ["", None])
+def test_kg_store_rejects_empty_predicate(spark, tmp_path, predicate):
+    """Hive-style partitioning writes "" and null to the same default
+    partition and reads both back as null: an empty predicate cannot
+    round-trip, so the store build fails with a named error."""
+    from remove_na_lgbtiq_queer_knowledge_graph_spark.queries_sparql import (
+        EmptyPredicateError,
+    )
+
+    frame = spark.createDataFrame(
+        [("http://ex.org/s", "http://ex.org/p", "o", None, None),
+         ("http://ex.org/s", predicate, "o", None, None)], _TRIPLE_DDL)
+    with pytest.raises(EmptyPredicateError):
+        _stored(spark, tmp_path, f"empty_predicate_{predicate!r}",
+                lambda: frame)
+
+
+def test_kg_store_without_predicate_stays_flat(spark, tmp_path):
+    frame = spark.createDataFrame(
+        [("http://ex.org/s", "o", 1), ("http://ex.org/t", "p", 2)],
+        "subject string, object string, n long")
+    store = _stored(spark, tmp_path, "no_predicate", lambda: frame)
+
+    assert _fields(store) == _fields(frame)
+    assert sorted(store.collect()) == sorted(frame.collect())
+    assert not any("=" in f.rsplit("/", 2)[1] for f in store.inputFiles())
+
+
+def test_bound_predicate_scan_prunes_partitions(spark, sf_dir):
+    from remove_na_lgbtiq_queer_knowledge_graph_spark.queries_sparql import (
+        factgrid_kg,
+    )
+
+    df = compile_sparql("""
+PREFIX fg: <https://database.factgrid.de/entity/>
+PREFIX fgt: <https://database.factgrid.de/prop/direct/>
+SELECT ?x WHERE { ?x fgt:P83 fg:Q225307 . }""", factgrid_kg(spark, sf_dir))
+    plan = df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted")
+    pruned = [ln for ln in plan.splitlines() if "PartitionFilters" in ln]
+    assert len(pruned) == 1, plan
+    assert "https://database.factgrid.de/prop/direct/P83" in pruned[0], plan
+    assert "predicate#" in pruned[0], plan
+
+
+def test_variable_predicate_matches_flat_store(spark, sf_dir, tmp_path):
+    """``?p`` patterns scan every predicate directory and must see the
+    same triples as a flat, unpartitioned store."""
+    from remove_na_lgbtiq_queer_knowledge_graph_spark.queries_sparql import (
+        factgrid_kg,
+    )
+
+    kg = factgrid_kg(spark, sf_dir)
+    flat_dir = str(tmp_path / "flat")
+    kg.write.parquet(flat_dir)
+    flat = spark.read.parquet(flat_dir)
+    assert _fields(flat) == _fields(kg)
+    text = """
+PREFIX fg: <https://database.factgrid.de/entity/>
+SELECT ?p1 ?x ?p2 ?y WHERE {
+  fg:Q225307 ?p1 ?x .
+  OPTIONAL { ?x ?p2 ?y . }
+}"""
+    got = compile_sparql(text, kg).collect()
+    assert got
+    assert sorted(got) == sorted(compile_sparql(text, flat).collect())
