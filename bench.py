@@ -13,6 +13,7 @@ from __future__ import annotations
 import json
 import os
 import sys
+import tempfile
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
@@ -229,11 +230,19 @@ def main() -> None:
     # dict past that tail — losing round-over-round comparability.  The
     # raw passes stay available for load-signature forensics in the
     # sidecar; the printed line keeps every headline/summary field.
-    sidecar = os.environ.get("SPARK_GRAFT_BENCH_SIDECAR",
-                             "/tmp/bench_raw_times.json")
+    # The default name is unique per run (pid, cores, sf), so the two
+    # runs of an A/B pair keep both sidecars; the payload carries its
+    # own sf/passes/loadavg stamps.
+    cores = spark.sparkContext.defaultParallelism
+    sidecar = os.environ.get("SPARK_GRAFT_BENCH_SIDECAR") or os.path.join(
+        tempfile.gettempdir(),
+        f"bench_raw_times_sf{sf_label}_c{cores}_p{os.getpid()}.json")
     try:
         with open(sidecar, "w") as f:
-            json.dump({"raw_times": raw_times,
+            json.dump({"sf": sf, "passes": PASSES,
+                       "loadavg_before": out["loadavg_before"],
+                       "loadavg_after": out["loadavg_after"],
+                       "raw_times": raw_times,
                        "duckdb_raw_times": duck_raw_times}, f)
         out["raw_times_sidecar"] = sidecar
     except OSError:

@@ -18,6 +18,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..spec import memo_get
+
 
 def keep_first_per_group(
     df: DataFrame, keys: Sequence[str], order: Sequence[Column]
@@ -316,10 +318,8 @@ def salted_join(
             fact._jdf.queryExecution().analyzed().semanticHash(),
             key, hot_share, sample_rows, sample_fraction,
         )
-        hot = _HOT_KEY_MEMO.get(memo_key)
-        if hot is None:
-            if len(_HOT_KEY_MEMO) >= 256:  # bound driver-side growth
-                _HOT_KEY_MEMO.pop(next(iter(_HOT_KEY_MEMO)))
+
+        def sample_hot_keys() -> list:
             pdf = (
                 fact.select(key)
                 .sample(fraction=float(sample_fraction), seed=42)
@@ -337,7 +337,10 @@ def salted_join(
             hot = [k for k, n in vc.items() if n / total > hot_share]
             if pdf[key].dtype.kind in "iu":  # numpy ints → Python for isin
                 hot = [int(k) for k in hot]
-            _HOT_KEY_MEMO[memo_key] = hot
+            return hot
+
+        # bound driver-side growth
+        hot = memo_get(_HOT_KEY_MEMO, memo_key, sample_hot_keys, cap=256)
     else:
         hot = [k for k in (hot_keys or []) if k is not None]
 
@@ -752,10 +755,8 @@ def interval_join(
             intervals._jdf.queryExecution().analyzed().semanticHash(),
             start_col, end_col, max_bins_per_interval, width_sample_rows,
         )
-        bin_width = _AUTO_WIDTH_MEMO.get(memo_key)
-        if bin_width is None:
-            if len(_AUTO_WIDTH_MEMO) >= 256:  # bound driver-side growth
-                _AUTO_WIDTH_MEMO.pop(next(iter(_AUTO_WIDTH_MEMO)))
+
+        def estimate_width() -> float:
             lens = intervals.select(
                 (F.col(end_col) - F.col(start_col)).cast("double")
                 .alias("__len")).where(F.col("__len") >= 0)
@@ -764,8 +765,11 @@ def interval_join(
             q = lens.limit(int(width_sample_rows)).approxQuantile(
                 "__len", [0.95], 0.01)
             p95 = q[0] if q and q[0] and q[0] > 0 else 1800.0
-            bin_width = max(p95, mx / max(1, max_bins_per_interval - 2))
-            _AUTO_WIDTH_MEMO[memo_key] = bin_width
+            return max(p95, mx / max(1, max_bins_per_interval - 2))
+
+        # bound driver-side growth
+        bin_width = memo_get(_AUTO_WIDTH_MEMO, memo_key, estimate_width,
+                             cap=256)
     w = F.lit(float(bin_width))
     nbins = (F.floor(F.col(end_col) / w) - F.floor(F.col(start_col) / w))
     # the guard must be TWO-SIDED: an INVERTED interval (end < start,

@@ -1,182 +1,20 @@
-"""BGP (basic graph pattern) planner over a triples DataFrame
-(SURVEY.md §2.11 G1-G13, §3.2).
+"""Property-path helpers over a triples DataFrame (SURVEY.md §2.11 G9).
 
-The reference runs SPARQL against Blazegraph/Wikidata endpoints (20+
-``.rq`` files).  Internally we plan the SPARQL-algebra subset those
-queries use directly onto DataFrame operations:
+BGP joins, OPTIONAL, UNION, FILTER (NOT) EXISTS, MINUS, VALUES and BIND
+are compiled from SPARQL text by :mod:`plans.sparql`.  This module holds
+the path relations that compiler and the ``graph_`` queries build on:
 
-- triple pattern → filtered scan of the triples DF (bound terms become
-  equality predicates — pushed into the parquet scan by Catalyst);
-- pattern conjunction → joins on shared variables;
-- OPTIONAL → left join (G2); UNION → unionByName (G3); FILTER → filter
-  (G4); FILTER NOT EXISTS / MINUS → left_anti (G5/G6); VALUES → isin
-  (G7); BIND → withColumn (G8); property path ``p1/p2`` → chained
-  patterns, ``p*`` → iterative fixpoint (G9, see ``transitive_closure``).
-
-Join order: patterns are planned most-bound-first (§4 rewrite 3 —
-selective patterns like ``BIND(fg:Q225307...)`` become point filters
-before joins); beyond that Catalyst + AQE reorder freely.
+- :func:`path_seq` — sequence path ``p1/p2/...`` as chained joins,
+  returning (src, dst) pairs;
+- :func:`transitive_closure` — ``p*``/``p+`` as an iterative fixpoint
+  (a driver-side BFS for ontology-sized edge sets, repeated squaring
+  with per-round lineage truncation otherwise).
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def _is_var(term: str) -> bool:
-    return term.startswith("?")
-
-
-@dataclass(frozen=True)
-class Pattern:
-    s: str
-    p: str
-    o: str
-
-    def bound_count(self) -> int:
-        return sum(0 if _is_var(x) else 1 for x in (self.s, self.p, self.o))
-
-
-def _scan(triples: DataFrame, pat: Pattern) -> DataFrame:
-    """One triple pattern → filtered scan with var-named columns.
-
-    Bound terms become equality filters (pushed to the scan); a variable
-    repeated within one pattern (``?x p ?x``) becomes a self-equality
-    filter.
-    """
-    df = triples
-    sel: dict[str, object] = {}
-    for term, col in ((pat.s, "subject"), (pat.p, "predicate"), (pat.o, "object")):
-        if not _is_var(term):
-            df = df.filter(F.col(col) == term)
-        elif term[1:] in sel:
-            df = df.filter(F.col(col) == F.col(sel[term[1:]]))
-        else:
-            sel[term[1:]] = col
-    return df.select(*[F.col(c).alias(v) for v, c in sel.items()])
-
-
-def _join_vars(left: DataFrame, right: DataFrame) -> list[str]:
-    return [c for c in left.columns if c in right.columns]
-
-
-class BGPQuery:
-    """Composable BGP query builder.
-
-    >>> q = (BGPQuery(triples)
-    ...      .where(("?c", "inNation", "?n"), ("?n", "name", "?nname"))
-    ...      .optional(("?c", "segment", "?seg"))
-    ...      .values("nname", ["NATION_1"])
-    ...      .select("c", "nname", "seg"))
-    """
-
-    def __init__(self, triples: DataFrame):
-        self._triples = triples
-        self._df: DataFrame | None = None
-
-    def _merge(self, df: DataFrame, how: str = "inner") -> "BGPQuery":
-        if self._df is None:
-            if how != "inner":
-                raise ValueError("first pattern group must be required")
-            self._df = df
-        else:
-            on = _join_vars(self._df, df)
-            if on:
-                self._df = self._df.join(df, on, how)
-            elif how == "inner":
-                self._df = self._df.crossJoin(df)
-            else:
-                # disjoint-vars OPTIONAL: crossJoin would discard the
-                # left-join semantics (an empty optional group must
-                # keep every left row with the new vars unbound)
-                self._df = self._df.join(df, F.lit(True), how)
-        return self
-
-    def _group(self, patterns: tuple[tuple[str, str, str], ...]) -> DataFrame:
-        # most-bound-first seeds the frame with the most selective
-        # pattern; after that, prefer a pattern SHARING a variable with
-        # the accumulated frame (round-13 review: the pure greedy order
-        # cross-joined two connected patterns whenever their link
-        # pattern sorted later — correct result, quadratic
-        # intermediate; same rule the SPARQL compiler uses)
-        remaining = sorted((Pattern(*p) for p in patterns),
-                           key=lambda p: -p.bound_count())
-        df = _scan(self._triples, remaining.pop(0))
-        while remaining:
-            idx = 0
-            for i, p in enumerate(remaining):
-                cand = {t[1:] for t in (p.s, p.p, p.o) if _is_var(t)}
-                if cand & set(df.columns):
-                    idx = i
-                    break
-            nxt = _scan(self._triples, remaining.pop(idx))
-            on = _join_vars(df, nxt)
-            df = df.join(nxt, on) if on else df.crossJoin(nxt)
-        return df
-
-    def where(self, *patterns: tuple[str, str, str]) -> "BGPQuery":
-        return self._merge(self._group(patterns))
-
-    def optional(self, *patterns: tuple[str, str, str]) -> "BGPQuery":
-        """G2: OPTIONAL group → left join on the shared variables."""
-        return self._merge(self._group(patterns), "left")
-
-    def not_exists(self, *patterns: tuple[str, str, str],
-                    minus: bool = False) -> "BGPQuery":
-        """G5/G6: FILTER NOT EXISTS (default) / MINUS (``minus=True``)
-        → anti join on the shared variables.  The two differ ONLY with
-        disjoint domains (SPARQL 1.1 §8.3.3): MINUS removes NOTHING
-        (no compatible bindings to subtract), while NOT EXISTS is
-        all-or-nothing — any sub-pattern match removes every row
-        (round-13 review: this builder silently applied NOT EXISTS
-        semantics to both; the text front-end already distinguished
-        them)."""
-        assert self._df is not None
-        sub = self._group(patterns)
-        on = _join_vars(self._df, sub)
-        if on:
-            self._df = self._df.join(sub, on, "left_anti")
-        elif not minus:
-            # all-or-nothing needs only sub-pattern NON-EMPTINESS: a
-            # 1-row broadcast probe, not an anti join against the
-            # fully evaluated sub-group (the front-end's shape)
-            self._df = self._df.join(
-                F.broadcast(sub.limit(1).select(F.lit(1).alias("__ne"))),
-                F.lit(True), "left_anti")
-        # disjoint-domain MINUS: no-op by spec
-        return self
-
-    def union(self, other: "BGPQuery") -> "BGPQuery":
-        """G3: UNION of pattern groups (columns aligned by name)."""
-        assert self._df is not None and other._df is not None
-        self._df = self._df.unionByName(other._df, allowMissingColumns=True)
-        return self
-
-    def values(self, var: str, allowed: list[str]) -> "BGPQuery":
-        """G7: VALUES inline table → isin."""
-        assert self._df is not None
-        self._df = self._df.filter(F.col(var).isin(allowed))
-        return self
-
-    def filter(self, cond: Column) -> "BGPQuery":
-        """G4: FILTER expression."""
-        assert self._df is not None
-        self._df = self._df.filter(cond)
-        return self
-
-    def bind(self, var: str, expr: Column) -> "BGPQuery":
-        """G8: BIND(expr AS ?var)."""
-        assert self._df is not None
-        self._df = self._df.withColumn(var, expr)
-        return self
-
-    def select(self, *vars: str, distinct: bool = False) -> DataFrame:
-        assert self._df is not None
-        out = self._df.select(*vars)
-        return out.distinct() if distinct else out
 
 
 def path_seq(triples: DataFrame, preds: list[str]) -> DataFrame:

@@ -49,6 +49,7 @@ from dataclasses import dataclass, field, replace
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..spec import memo_get
 from .bgp import transitive_closure
 
 RDF_TYPE = "http://www.w3.org/1999/02/22-rdf-syntax-ns#type"
@@ -899,7 +900,8 @@ def _lang_col(var: str) -> str:
 
 # (session id, triples frame id, prefs) → (triples frame, label dim).
 # KG frames are session-memoized (queries_sparql.kg_memo), so their ids
-# are stable for the session and the dim is shared across queries.
+# are stable for the session and the dim is shared across queries;
+# memo_get's cap bounds the pinned frames across sessions.
 _LABEL_DIM_MEMO: dict[tuple, tuple] = {}
 
 
@@ -1226,10 +1228,10 @@ class _Compiler:
             if how == "inner":
                 return env.crossJoin(df)
             # disjoint-vars OPTIONAL must keep every env row when the
-            # group is empty; disjoint NOT EXISTS is all-or-nothing.
-            # (SPARQL's MINUS with disjoint domains removes nothing —
-            # this engine maps MINUS to NOT EXISTS throughout, a
-            # documented approximation.)  crossJoin discarded `how`.
+            # group is empty; crossJoin discarded `how`.  Disjoint
+            # FILTER NOT EXISTS and MINUS never get here:
+            # _apply_not_exists makes the former all-or-nothing and
+            # keeps the latter a no-op (§8.3.3).
             return env.join(df, F.lit(True), how)
         langs = [c for c in on if c.startswith("__lang__")]
         nullable = [c for c in on if c in self._maybe_unbound
@@ -1835,26 +1837,35 @@ class _Compiler:
                 }
                 shared = ([v for v in item.vars if v in env.columns]
                           if env is not None else [])
+                tagged = any(lg is not None for r in row_langs for lg in r)
                 if env is not None and not has_undef \
                         and len(item.vars) == 1 and shared \
-                        and not lang_vars \
+                        and not tagged \
                         and len(set(rows)) == len(rows):
                     # single-var distinct-row fast path, NULL-CORRECT
                     # (round-9 review: a bare isin dropped env rows
                     # whose shared variable was unbound, violating
                     # §10.2.2 — an unbound is compatible with EVERY
                     # row and takes its binding).  ONE codegen pass:
-                    # each row explodes to its own value (bound) or to
-                    # every VALUES cell (unbound — the compatibility
-                    # expansion), then the isin keeps matching rows.
+                    # the filter keeps the bound rows whose value is a
+                    # cell (a plain predicate Catalyst pushes into the
+                    # scan) and the unbound rows, which then explode to
+                    # every VALUES cell (the compatibility expansion).
                     # No join and no second evaluation of the solution
                     # subtree — a filter+union split was measured 3×
                     # slower on the big network frames because both
                     # branches recomputed the statement walk, and the
                     # compat join's nested loop costs the same again.
+                    # Every cell is untagged, so a bound value's
+                    # __lang__ companion must be NULL (a tagged binding
+                    # is a different RDF term); an unbound row's
+                    # companion is NULL already.
                     v = item.vars[0]
                     vals = [r[0] for r in rows]
-                    env = env.withColumn(
+                    match = F.col(v).isin(vals)
+                    if _lang_col(v) in env.columns:
+                        match = match & F.col(_lang_col(v)).isNull()
+                    env = env.filter(F.col(v).isNull() | match).withColumn(
                         v,
                         F.explode(
                             F.when(
@@ -1862,7 +1873,7 @@ class _Compiler:
                                 F.array(*[F.lit(x) for x in vals]),
                             ).otherwise(F.array(F.col(v)))
                         ),
-                    ).filter(F.col(v).isin(vals))
+                    )
                 elif shared:
                     # §10.2.2 compatibility join: a row's UNDEF cell is
                     # compatible with any binding, AND an env-side
@@ -2089,26 +2100,27 @@ class _Compiler:
         query over the same session-memoized KG) reuses the materialized
         dim instead of re-aggregating the label triples per attach."""
         key = (id(self.triples.sparkSession), id(self.triples), prefs)
-        hit = _LABEL_DIM_MEMO.get(key)
-        if hit is not None:
-            return hit[1]
-        rank = F.when(F.col("lang") == prefs[0], F.lit(0))
-        for i, lg in enumerate(prefs[1:], start=1):
-            rank = rank.when(F.col("lang") == lg, F.lit(i))
-        dim = (
-            self.triples
-            .filter((F.col("predicate") == RDFS_LABEL)
-                    & F.col("lang").isin(list(prefs)))
-            .withColumn("__rank", rank)
-            .groupBy(F.col("subject").alias("__lbl_subject"))
-            .agg(F.min_by("object", F.struct("__rank", "object"))
-                 .alias("__lbl"))
-            .localCheckpoint(eager=True)
-        )
-        # the memo pins the triples frame too: the key uses id(triples),
-        # and a GC'd frame could otherwise hand its id to a new object
-        _LABEL_DIM_MEMO[key] = (self.triples, dim)
-        return dim
+
+        def build() -> tuple:
+            rank = F.when(F.col("lang") == prefs[0], F.lit(0))
+            for i, lg in enumerate(prefs[1:], start=1):
+                rank = rank.when(F.col("lang") == lg, F.lit(i))
+            dim = (
+                self.triples
+                .filter((F.col("predicate") == RDFS_LABEL)
+                        & F.col("lang").isin(list(prefs)))
+                .withColumn("__rank", rank)
+                .groupBy(F.col("subject").alias("__lbl_subject"))
+                .agg(F.min_by("object", F.struct("__rank", "object"))
+                     .alias("__lbl"))
+                .localCheckpoint(eager=True)
+            )
+            # the memo pins the triples frame too: the key uses
+            # id(triples), and a GC'd frame could otherwise hand its id
+            # to a new object
+            return self.triples, dim
+
+        return memo_get(_LABEL_DIM_MEMO, key, build)[1]
 
     def _alt_label_dim(self, prefs: tuple[str, ...]) -> DataFrame:
         """The (subject, aliases) dimension for ``?xAltLabel``:
@@ -2117,36 +2129,37 @@ class _Compiler:
         with ", ").  Memoized like the label dim."""
         key = (id(self.triples.sparkSession), id(self.triples),
                ("alt",) + prefs)
-        hit = _LABEL_DIM_MEMO.get(key)
-        if hit is not None:
-            return hit[1]
-        rank = F.when(F.col("lang") == prefs[0], F.lit(0))
-        for i, lg in enumerate(prefs[1:], start=1):
-            rank = rank.when(F.col("lang") == lg, F.lit(i))
-        best = F.min("__rank")
-        rows = F.sort_array(F.collect_list(F.struct("__rank", "object")))
-        dim = (
-            self.triples
-            .filter((F.col("predicate") == SKOS_ALT_LABEL)
-                    & F.col("lang").isin(list(prefs)))
-            .withColumn("__rank", rank)
-            .groupBy(F.col("subject").alias("__alt_subject"))
-            .agg(best.alias("__best"), rows.alias("__rows"))
-            .select(
-                "__alt_subject",
-                F.array_join(
-                    F.transform(
-                        F.filter("__rows",
-                                 lambda x: x["__rank"] == F.col("__best")),
-                        lambda x: x["object"],
-                    ),
-                    ", ",
-                ).alias("__alt"),
+
+        def build() -> tuple:
+            rank = F.when(F.col("lang") == prefs[0], F.lit(0))
+            for i, lg in enumerate(prefs[1:], start=1):
+                rank = rank.when(F.col("lang") == lg, F.lit(i))
+            best = F.min("__rank")
+            rows = F.sort_array(
+                F.collect_list(F.struct("__rank", "object")))
+            dim = (
+                self.triples
+                .filter((F.col("predicate") == SKOS_ALT_LABEL)
+                        & F.col("lang").isin(list(prefs)))
+                .withColumn("__rank", rank)
+                .groupBy(F.col("subject").alias("__alt_subject"))
+                .agg(best.alias("__best"), rows.alias("__rows"))
+                .select(
+                    "__alt_subject",
+                    F.array_join(
+                        F.transform(
+                            F.filter("__rows",
+                                     lambda x: x["__rank"] == F.col("__best")),
+                            lambda x: x["object"],
+                        ),
+                        ", ",
+                    ).alias("__alt"),
+                )
+                .localCheckpoint(eager=True)
             )
-            .localCheckpoint(eager=True)
-        )
-        _LABEL_DIM_MEMO[key] = (self.triples, dim)
-        return dim
+            return self.triples, dim
+
+        return memo_get(_LABEL_DIM_MEMO, key, build)[1]
 
     def _attach_alt_label(self, env: DataFrame, base_var: str,
                           alt_var: str) -> DataFrame:
@@ -2220,16 +2233,26 @@ def compile_sparql(
         tuple(sorted((k, id(v)) for k, v in (services or {}).items())),
         auto_language, tuple(sorted((prefixes or {}).items())),
     )
-    hit = _COMPILE_MEMO.get(memo_key)
-    if hit is not None:
-        return hit[-1]
+    return memo_get(_COMPILE_MEMO, memo_key, lambda: (
+        triples, services,
+        _compile(text, triples, services, auto_language, prefixes)))[-1]
+
+
+# (session id, text, KG id, service ids, language, prefixes) →
+# (KG frame, services, plan).  memo_get's cap bounds how many KG frames
+# the pins hold across sessions.
+_COMPILE_MEMO: dict[tuple, tuple] = {}
+
+
+def _compile(text: str, triples: DataFrame,
+             services: dict[str, DataFrame] | None, auto_language: str,
+             prefixes: dict[str, str] | None) -> DataFrame:
+    """:func:`compile_sparql` without the memo."""
     q = parse(text, prefixes)
     c = _Compiler(triples, services, auto_language)
     if q.form == "describe":
         env = c._compile_group(q.where) if q.where.items else None
-        out = _describe_triples(env, q, triples)
-        _COMPILE_MEMO[memo_key] = (triples, services, out)
-        return out
+        return _describe_triples(env, q, triples)
     env = c._compile_group(q.where)
     if env is None:
         raise ValueError("query has no bindings")
@@ -2255,11 +2278,7 @@ def compile_sparql(
         out = _construct_triples(env, q)
     else:
         out = _project_query(c, env, q)
-    _COMPILE_MEMO[memo_key] = (triples, services, out)
     return out
-
-
-_COMPILE_MEMO: dict[tuple, tuple] = {}
 
 
 def _describe_triples(env: DataFrame | None, q: Query,

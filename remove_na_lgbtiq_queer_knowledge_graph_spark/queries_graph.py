@@ -1,8 +1,10 @@
 """Graph / triples / BGP queries (SURVEY.md §2.11) with DuckDB oracles.
 
-The oracle SQL rebuilds the same triples table as a CTE and runs the
-SPARQL-algebra operation as relational SQL — so the BGP planner's join
-semantics are checked end-to-end, not just row counts.
+The BGP queries are SPARQL text compiled by ``plans.sparql`` over the
+materialized star-schema triples.  The oracle SQL rebuilds the same
+triples table as a CTE and runs the SPARQL-algebra operation as
+relational SQL — so the compiler's join semantics are checked
+end-to-end, not just row counts.
 """
 
 from __future__ import annotations
@@ -11,8 +13,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.graph import degrees, neighborhood, two_hop
-from .plans.bgp import BGPQuery, path_seq, transitive_closure
+from .plans.bgp import path_seq, transitive_closure
 from .plans.r2rml import materialize, star_schema_maps
+from .plans.sparql import compile_sparql
 from .spec import QuerySpec, t
 
 _TRIPLES_CTE = """
@@ -65,13 +68,11 @@ FROM triples"""
 def graph_bgp_region_members(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G1/G11: BGP conjunction — every entity in region ASIA with its
     name (4-pattern join, the `network-00-starting-point.rq` shape)."""
-    q = BGPQuery(_triples(spark, sf_dir)).where(
-        ("?e", "inNation", "?n"),
-        ("?n", "inRegion", "?r"),
-        ("?r", "name", "ASIA"),
-        ("?e", "name", "?ename"),
-    )
-    return q.select("e", "ename", distinct=True)
+    return compile_sparql("""
+      SELECT DISTINCT ?e ?ename WHERE {
+        ?e <inNation> ?n . ?n <inRegion> ?r . ?r <name> "ASIA" .
+        ?e <name> ?ename
+      }""", _triples(spark, sf_dir))
 
 
 _BGP_SQL = f"""
@@ -88,12 +89,11 @@ WHERE t1.predicate = 'inNation'
 def graph_optional_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G2: OPTIONAL — names of all typed entities with segment if
     present (suppliers have none → null, `lokale-from-factgrid.rq:29-38`)."""
-    q = (
-        BGPQuery(_triples(spark, sf_dir))
-        .where(("?e", "type", "?etype"), ("?e", "name", "?ename"))
-        .optional(("?e", "segment", "?seg"))
-    )
-    return q.select("e", "etype", "ename", "seg")
+    return compile_sparql("""
+      SELECT ?e ?etype ?ename ?seg WHERE {
+        ?e <type> ?etype . ?e <name> ?ename .
+        OPTIONAL { ?e <segment> ?seg }
+      }""", _triples(spark, sf_dir))
 
 
 _OPTIONAL_SQL = f"""
@@ -110,20 +110,14 @@ def graph_union_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G3+G8: UNION of pattern groups with a branch tag
     (`companions_and_relations.rq:56-67` — customer-shaped and
     supplier-shaped branches over the same graph, bag semantics)."""
-    trip = _triples(spark, sf_dir)
-    cust = (
-        BGPQuery(trip)
-        .where(("?e", "type", "Customer"), ("?e", "inNation", "?n"),
-               ("?n", "name", "?nname"))
-        .bind("kind", F.lit("customer"))
-    )
-    supp = (
-        BGPQuery(trip)
-        .where(("?e", "type", "Supplier"), ("?e", "inNation", "?n"),
-               ("?n", "name", "?nname"))
-        .bind("kind", F.lit("supplier"))
-    )
-    return cust.union(supp).select("e", "nname", "kind")
+    return compile_sparql("""
+      SELECT ?e ?nname ?kind WHERE {
+        { ?e <type> "Customer" . ?e <inNation> ?n . ?n <name> ?nname .
+          BIND("customer" AS ?kind) }
+        UNION
+        { ?e <type> "Supplier" . ?e <inNation> ?n . ?n <name> ?nname .
+          BIND("supplier" AS ?kind) }
+      }""", _triples(spark, sf_dir))
 
 
 _UNION_SQL = f"""
@@ -145,14 +139,12 @@ WHERE t1.predicate = 'type' AND t1.object = 'Supplier'
 def graph_values_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G7+G4: VALUES inline table + FILTER regex
     (`db_all_person_relations.rq:36-45`, `companions_and_relations.rq:76`)."""
-    q = (
-        BGPQuery(_triples(spark, sf_dir))
-        .where(("?n", "inRegion", "?r"), ("?r", "name", "?rname"),
-               ("?n", "name", "?nname"))
-        .values("rname", ["EUROPE", "ASIA"])
-        .filter(F.col("nname").rlike("_1?[0-9]$"))
-    )
-    return q.select("nname", "rname")
+    return compile_sparql("""
+      SELECT ?nname ?rname WHERE {
+        ?n <inRegion> ?r . ?r <name> ?rname . ?n <name> ?nname .
+        VALUES ?rname { "EUROPE" "ASIA" }
+        FILTER(REGEX(?nname, "_1?[0-9]$"))
+      }""", _triples(spark, sf_dir))
 
 
 _VALUES_SQL = f"""
@@ -172,8 +164,6 @@ def sparql_values_undef(spark: SparkSession, sf_dir: str) -> DataFrame:
     an UNDEF cell is compatible with any binding, so the inline table
     is a compatibility JOIN (bag semantics — a solution matched by two
     rows appears twice), not an isin filter."""
-    from .plans.sparql import compile_sparql
-
     q = """
       SELECT ?n ?rname ?status WHERE {
         ?n <inRegion> ?r . ?r <name> ?rname .
@@ -202,12 +192,11 @@ FROM sol JOIN vals v ON v.v_rname IS NULL OR v.v_rname = sol.rname
 def graph_not_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G5: FILTER NOT EXISTS — nations without suppliers
     (`get_factgrid_ids_from_wikidata.rq:18-21`)."""
-    q = (
-        BGPQuery(_triples(spark, sf_dir))
-        .where(("?n", "inRegion", "?r"), ("?n", "name", "?nname"))
-        .not_exists(("?s", "inNation", "?n"), ("?s", "type", "Supplier"))
-    )
-    return q.select("n", "nname")
+    return compile_sparql("""
+      SELECT ?n ?nname WHERE {
+        ?n <inRegion> ?r . ?n <name> ?nname .
+        FILTER NOT EXISTS { ?s <inNation> ?n . ?s <type> "Supplier" }
+      }""", _triples(spark, sf_dir))
 
 
 _NOTEXISTS_SQL = f"""
@@ -226,14 +215,14 @@ WHERE t1.predicate = 'inRegion'
 
 def graph_bind_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """G8+F9: BIND with an id-extraction expression
-    (`companions_and_relations.rq:38-43`; `extract_id`)."""
-    q = (
-        BGPQuery(_triples(spark, sf_dir))
-        .where(("?e", "type", "Customer"), ("?e", "name", "?ename"))
-        .bind("eid", F.regexp_extract(F.col("e"), r"([0-9]+)$", 1).cast("long"))
-        .filter(F.col("eid") % 100 == 0)
-    )
-    return q.select("e", "ename", "eid")
+    (`companions_and_relations.rq:38-43`; `extract_id`).  The integer
+    cast and its filter stay DataFrame calls on the compiled BGP: the
+    SPARQL subset has no integer cast."""
+    bgp = compile_sparql("""
+      SELECT ?e ?ename WHERE { ?e <type> "Customer" . ?e <name> ?ename }
+      """, _triples(spark, sf_dir))
+    eid = F.regexp_extract(F.col("e"), r"([0-9]+)$", 1).cast("long")
+    return bgp.withColumn("eid", eid).filter(F.col("eid") % 100 == 0)
 
 
 _BIND_SQL = f"""

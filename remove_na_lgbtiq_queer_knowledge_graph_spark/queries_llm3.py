@@ -28,7 +28,7 @@ from .functions.numeric import round_half_away_col
 from pyspark.sql import Window as W
 
 from .queries_llm2 import _WORDS_DUCK, _WORDS_SPARK, _kmeans_fit_ctes
-from .spec import QuerySpec, t
+from .spec import QuerySpec, memo_get, t
 from .spec import materialize as _cache
 
 # ---------------------------------------------------------------------------
@@ -72,11 +72,7 @@ def _fit_memo(spark: SparkSession, sf_dir: str, tag: object, fit):
     any localCheckpoint blocks via the ContextCleaner."""
     key = (spark.sparkContext.applicationId, sf_dir, _src_mtime(sf_dir),
            tag)
-    if key not in _FIT_MEMOS:
-        if len(_FIT_MEMOS) >= 16:
-            _FIT_MEMOS.pop(next(iter(_FIT_MEMOS)))
-        _FIT_MEMOS[key] = fit()
-    return _FIT_MEMOS[key]
+    return memo_get(_FIT_MEMOS, key, fit, cap=16)
 
 
 def _bpe_fit_memo(spark: SparkSession, sf_dir: str):

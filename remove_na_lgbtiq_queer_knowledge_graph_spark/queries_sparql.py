@@ -25,7 +25,7 @@ from pyspark.sql import functions as F
 
 from .plans.r2rml import Template, TriplesMap, materialize
 from .plans.sparql import RDFS_LABEL, SKOS_ALT_LABEL, compile_sparql
-from .spec import QuerySpec, t
+from .spec import QuerySpec, memo_get, scratch_dir, t
 
 FG = "https://database.factgrid.de/entity/"
 FGT = "https://database.factgrid.de/prop/direct/"
@@ -331,9 +331,8 @@ def kg_memo(key: str, spark: SparkSession, sf_dir: str, build,
     # applicationId, not id(spark): id() can be reused after a stopped
     # session is collected (same rule as spec._TABLE_MEMO)
     k = (spark.sparkContext.applicationId, sf_dir, key, mtimes)
-    if k not in _KG_MEMO:
-        if len(_KG_MEMO) >= 256:  # bound growth across sessions/mtimes
-            _KG_MEMO.pop(next(iter(_KG_MEMO)))
+
+    def build_store() -> DataFrame:
         # Materialize the fixture as a PARQUET table, not a
         # localCheckpoint: checkpoint blocks deserialize the ENTIRE
         # row set on every scan, and a BGP compiles to one scan per
@@ -346,11 +345,11 @@ def kg_memo(key: str, spark: SparkSession, sf_dir: str, build,
         # (create-rdf.py) before any query runs.
         df = build()
         if store:
-            from .spec import scratch_dir
-
             df = _write_store(df, os.path.join(scratch_dir(f"kg_{key}_"), "t"))
-        _KG_MEMO[k] = df
-    return _KG_MEMO[k]
+        return df
+
+    # bounded across sessions/mtimes
+    return memo_get(_KG_MEMO, k, build_store, cap=256)
 
 
 def factgrid_kg(spark: SparkSession, sf_dir: str) -> DataFrame:

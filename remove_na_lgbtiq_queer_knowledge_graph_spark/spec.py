@@ -22,6 +22,7 @@ match across engines):
 from __future__ import annotations
 
 import os
+import threading
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -73,26 +74,42 @@ def scratch_dir(prefix: str) -> str:
 _TABLE_MEMO: dict[tuple, DataFrame] = {}
 
 
+_MEMO_LOCK = threading.Lock()
+_MISS = object()
+
+
+def memo_get(memo: dict, key, build, cap: int = 512):
+    """The ONE bounded get-or-build every module-level memo uses: return
+    ``memo[key]``, building and storing it on a miss, and evict the
+    oldest entry (FIFO) once ``cap`` entries are held.  ``build`` runs
+    outside the lock: two threads that miss together both build, and
+    the later store wins."""
+    value = memo.get(key, _MISS)
+    if value is not _MISS:
+        return value
+    value = build()
+    with _MEMO_LOCK:
+        if len(memo) >= cap:
+            memo.pop(next(iter(memo)))
+        memo[key] = value
+    return value
+
+
 def source_memo(memo: dict, spark: SparkSession, path: str, build,
                 extra=None, cap: int = 512):
-    """The ONE copy of the source-keyed memo discipline: key on
-    (applicationId, path, mtime, extra) so a regenerated source file —
-    or a new session — invalidates instead of serving stale state, and
-    bound growth with FIFO eviction.  applicationId, not id(spark): a
-    stopped session's id() can be reused by a later allocation; the
-    string id is stable and unique per app.  Used by :func:`t`'s table
-    memo and streaming's schema memo (round-13 review: those were two
-    hand-synced copies that had already drifted on eviction order)."""
+    """The source-keyed memo discipline: key on (applicationId, path,
+    mtime, extra) so a regenerated source file — or a new session —
+    invalidates instead of serving stale state, bounded by
+    :func:`memo_get`.  applicationId, not id(spark): a stopped session's
+    id() can be reused by a later allocation; the string id is stable
+    and unique per app.  Used by :func:`t`'s table memo and streaming's
+    schema memo."""
     try:
         mtime = os.path.getmtime(path)
     except OSError:
         mtime = None
     key = (spark.sparkContext.applicationId, path, mtime, extra)
-    if key not in memo:
-        if len(memo) >= cap:
-            memo.pop(next(iter(memo)))
-        memo[key] = build()
-    return memo[key]
+    return memo_get(memo, key, build, cap)
 
 
 def normalize_event_ts(df: DataFrame) -> DataFrame:

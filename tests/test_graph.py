@@ -1,11 +1,14 @@
-"""BGP planner / property-path / graph-analytics unit tests (SURVEY §2.11)."""
+"""BGP (SPARQL text through compile_sparql) / property-path /
+graph-analytics unit tests (SURVEY §2.11)."""
 
 from pyspark.sql import functions as F
 
 from remove_na_lgbtiq_queer_knowledge_graph_spark.plans.bgp import (
-    BGPQuery,
     path_seq,
     transitive_closure,
+)
+from remove_na_lgbtiq_queer_knowledge_graph_spark.plans.sparql import (
+    compile_sparql,
 )
 from remove_na_lgbtiq_queer_knowledge_graph_spark.operators.graph import (
     degrees,
@@ -32,34 +35,38 @@ def _tri(spark):
 
 
 def test_bgp_conjunction_and_union(spark):
-    tri = _tri(spark)
-    people = BGPQuery(tri).where(("?e", "type", "Person"), ("?e", "name", "?n"))
-    orgs = BGPQuery(tri).where(("?e", "type", "Org"), ("?e", "name", "?n"))
-    got = {(r.e, r.n) for r in people.union(orgs).select("e", "n").collect()}
-    assert got == {("a", "Alice"), ("b", "Bob"), ("x", "Xorg")}
+    got = compile_sparql("""
+      SELECT ?e ?n WHERE {
+        { ?e <type> "Person" . ?e <name> ?n }
+        UNION
+        { ?e <type> "Org" . ?e <name> ?n }
+      }""", _tri(spark))
+    assert {(r.e, r.n) for r in got.collect()} == {
+        ("a", "Alice"), ("b", "Bob"), ("x", "Xorg")}
 
 
 def test_bgp_optional_null(spark):
-    q = BGPQuery(_tri(spark)).where(("?e", "type", "?t")).optional(("?e", "name", "?n"))
-    rows = {r.e: r.n for r in q.select("e", "n").collect()}
-    assert rows["a"] == "Alice" and rows["x"] == "Xorg"
+    q = compile_sparql("""
+      SELECT ?e ?n WHERE { ?e <type> ?t OPTIONAL { ?e <name> ?n } }""",
+                       _tri(spark))
+    rows = {r.e: r.n for r in q.collect()}
+    assert rows == {"a": "Alice", "b": "Bob", "x": "Xorg"}
 
 
 def test_bgp_not_exists(spark):
     # entities never appearing as the object of `knows`
-    q = (
-        BGPQuery(_tri(spark))
-        .where(("?e", "type", "?t"))
-        .not_exists(("?z", "knows", "?e"))
-    )
-    assert {r.e for r in q.select("e").collect()} == {"a", "x"}
+    q = compile_sparql("""
+      SELECT ?e WHERE {
+        ?e <type> ?t FILTER NOT EXISTS { ?z <knows> ?e }
+      }""", _tri(spark))
+    assert {r.e for r in q.collect()} == {"a", "x"}
 
 
 def test_bgp_repeated_var_self_equality(spark):
     tri = spark.createDataFrame(
         [("s", "p", "s"), ("s", "p", "o")], ["subject", "predicate", "object"]
     )
-    got = BGPQuery(tri).where(("?x", "p", "?x")).select("x").collect()
+    got = compile_sparql("SELECT ?x WHERE { ?x <p> ?x }", tri).collect()
     assert [r.x for r in got] == ["s"]
 
 
@@ -250,17 +257,17 @@ def test_optional_with_disjoint_vars_keeps_left_rows(spark):
     tri = spark.createDataFrame(
         [("a", "p", "b"), ("c", "p", "d")],
         ["subject", "predicate", "object"])
-    got = (BGPQuery(tri)
-           .where(("?x", "p", "?y"))
-           .optional(("?z", "missing", "?w"))
-           .select("x", "y", "z", "w").collect())
+    got = compile_sparql("""
+      SELECT ?x ?y ?z ?w WHERE {
+        ?x <p> ?y OPTIONAL { ?z <missing> ?w }
+      }""", tri).collect()
     assert {(r.x, r.y, r.z, r.w) for r in got} == {
         ("a", "b", None, None), ("c", "d", None, None)}
     # non-empty disjoint optional: every combination, left rows kept
-    got2 = (BGPQuery(tri)
-            .where(("?x", "p", "?y"))
-            .optional(("?z", "p", "?w"))
-            .select("x", "z", distinct=True).collect())
+    got2 = compile_sparql("""
+      SELECT DISTINCT ?x ?z WHERE {
+        ?x <p> ?y OPTIONAL { ?z <p> ?w }
+      }""", tri).collect()
     assert len(got2) == 4
 
 
@@ -271,13 +278,15 @@ def test_not_exists_with_disjoint_vars_is_all_or_nothing(spark):
     tri = spark.createDataFrame(
         [("a", "p", "b"), ("c", "q", "d")],
         ["subject", "predicate", "object"])
-    kept = (BGPQuery(tri).where(("?x", "p", "?y"))
-            .not_exists(("?z", "nosuch", "?w"))
-            .select("x").collect())
+    kept = compile_sparql("""
+      SELECT ?x WHERE {
+        ?x <p> ?y FILTER NOT EXISTS { ?z <nosuch> ?w }
+      }""", tri).collect()
     assert [r.x for r in kept] == ["a"]
-    removed = (BGPQuery(tri).where(("?x", "p", "?y"))
-               .not_exists(("?z", "q", "?w"))
-               .select("x").collect())
+    removed = compile_sparql("""
+      SELECT ?x WHERE {
+        ?x <p> ?y FILTER NOT EXISTS { ?z <q> ?w }
+      }""", tri).collect()
     assert removed == []
 
 
@@ -790,24 +799,6 @@ def test_sampled_betweenness_empty_result_keeps_id_types(spark):
                  for f in out.schema.fields}
         assert kinds == {"a": "bigint", "b": "bigint",
                          "betweenness": "double"}, depth
-
-
-def test_not_exists_vs_minus_disjoint_domains(spark):
-    """§8.3.3 (round-13 review): with NO shared variables, NOT EXISTS
-    is all-or-nothing while MINUS removes NOTHING — the builder used
-    to apply NOT EXISTS semantics to both."""
-    from remove_na_lgbtiq_queer_knowledge_graph_spark.plans.bgp import BGPQuery
-
-    rows = [("a", "knows", "b", None, None), ("x", "type", "T", None, None)]
-    tr = spark.createDataFrame(
-        rows, "subject string, predicate string, object string,"
-              " lang string, dtype string")
-    ne = (BGPQuery(tr).where(("?s", "knows", "?o"))
-          .not_exists(("?z", "type", "T")).select("s"))
-    assert ne.count() == 0          # sub-pattern matches → all die
-    mi = (BGPQuery(tr).where(("?s", "knows", "?o"))
-          .not_exists(("?z", "type", "T"), minus=True).select("s"))
-    assert mi.count() == 1          # disjoint MINUS removes nothing
 
 
 def test_transitive_closure_null_edges_and_cap(spark):

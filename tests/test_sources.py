@@ -315,3 +315,48 @@ def test_read_jdbc_bounds_without_partition_column_raise(spark):
     with pytest.raises(ValueError, match="without\\s+partition_column"):
         read_jdbc(spark, "jdbc:h2:mem:x", "t", lower_bound=0,
                   upper_bound=10, num_partitions=4)
+
+
+def test_memo_get_is_bounded_fifo_and_thread_safe():
+    """spec.memo_get, the get-or-build every module-level memo uses:
+    a hit never rebuilds, the oldest entry goes first at the cap, and
+    threads missing together at the cap neither raise nor overfill."""
+    import sys
+    import threading
+
+    from remove_na_lgbtiq_queer_knowledge_graph_spark.spec import memo_get
+
+    memo: dict = {}
+    builds = []
+
+    def build(k):
+        builds.append(k)
+        return k.upper()
+
+    for k in ("a", "b", "a", "c"):
+        assert memo_get(memo, k, lambda k=k: build(k), cap=2) == k.upper()
+    assert builds == ["a", "b", "c"] and list(memo) == ["b", "c"]
+
+    shared: dict = {}
+    errors = []
+
+    def worker(w):
+        try:
+            for i in range(3000):
+                memo_get(shared, (w, i), lambda: i, cap=4)
+        except Exception as exc:  # noqa: BLE001 — reported below
+            errors.append(exc)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=worker, args=(w,))
+                   for w in range(8)]
+        for th in threads:
+            th.start()
+        for th in threads:
+            th.join(timeout=60)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(th.is_alive() for th in threads)
+    assert errors == [] and len(shared) <= 4

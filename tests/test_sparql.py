@@ -1225,6 +1225,37 @@ def test_values_joins_env_side_unbound(triples):
     assert _vals(df, "s", "t") == [("http://ex.org/c", "x")]
 
 
+def test_values_plain_literals_stay_on_fast_path_over_lang_frame(spark):
+    """A single-var VALUES of untagged literals over a frame with a
+    ``lang`` column takes the isin fast path, not the broadcast
+    nested-loop compatibility join, and still keeps RDF term equality
+    (a ``"x"@de`` binding is not the plain ``"x"``) and §10.2.2 (an
+    OPTIONAL-unbound row expands to every cell)."""
+    ex = "http://ex.org/"
+    tri = spark.createDataFrame(
+        [(ex + "p", ex + "v", "x", None, None),
+         (ex + "q", ex + "v", "x", "de", None),
+         (ex + "r", ex + "v", "y", None, None),
+         (ex + "u", RDF_TYPE, ex + "T", None, None)],
+        "subject string, predicate string, object string, "
+        "lang string, dtype string")
+
+    def plan(df):
+        return df._sc._jvm.PythonSQLUtils.explainString(
+            df._jdf.queryExecution(), "formatted")
+
+    bound = compile_sparql(_PFX + """
+      SELECT ?s ?o WHERE { ?s ex:v ?o VALUES ?o { "x" "y" } }""", tri)
+    assert "BroadcastNestedLoopJoin" not in plan(bound)
+    assert _vals(bound, "s", "o") == [(ex + "p", "x"), (ex + "r", "y")]
+    unbound = compile_sparql(_PFX + """
+      SELECT ?s ?o WHERE {
+        ?s a ex:T OPTIONAL { ?s ex:v ?o } VALUES ?o { "x" "y" }
+      }""", tri)
+    assert "BroadcastNestedLoopJoin" not in plan(unbound)
+    assert _vals(unbound, "s", "o") == [(ex + "u", "x"), (ex + "u", "y")]
+
+
 def test_values_chained_undef_then_constrained(triples):
     """{ VALUES (?x ?y) { ("p" UNDEF) } VALUES ?y { "q" } } — the
     NULL ?y produced by the first block is compatible with the second
