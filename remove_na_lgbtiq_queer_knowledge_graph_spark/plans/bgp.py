@@ -13,8 +13,10 @@ the path relations that compiler and the ``graph_`` queries build on:
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 
 
 def path_seq(triples: DataFrame, preds: list[str]) -> DataFrame:
@@ -76,10 +78,18 @@ def _driver_closure(closure: DataFrame, reflexive: bool, spark,
     # tolerates None (NULLs first, like Spark's default ordering).
     rows = sorted(out) + sorted(
         null_rows, key=lambda t: tuple((v is not None, v or "") for v in t))
+    # Through Arrow, not a list: a list becomes a pickled Python RDD,
+    # and every execution that scans it starts Python workers to
+    # unpickle the rows (~0.17 s per broadcast of a 6-pair closure on
+    # 2 cores); an Arrow table becomes a LocalRelation, which the
+    # driver broadcasts with no Spark job.
     schema = closure.schema
-    if rows:
-        return spark.createDataFrame(rows, schema)
-    return spark.createDataFrame([], schema)
+    arrow_schema = to_arrow_schema(schema)
+    cols = list(zip(*rows)) if rows else [() for _ in schema]
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)
 
 
 def transitive_closure(
@@ -114,13 +124,13 @@ def transitive_closure(
                                  edges.sparkSession, pair_cap=500_000,
                                  rows=probe)
         if result is not None:
-            # Driver-built and bounded by pair_cap (≤500k pairs), but an
-            # ExistingRDD has no size stats, so the path-algebra joins
-            # that fold this relation against the (at scale TB-sized)
-            # triples frame planned SortMergeJoins shuffling the triples
-            # side.  Hint it broadcastable — same bounded-build-side
-            # argument as the connected_components fast path (guide
-            # §3.1).  The distributed fixpoint below stays unhinted.
+            # Driver-built and bounded by pair_cap (≤500k pairs), which
+            # can still exceed the auto-broadcast threshold, and then the
+            # path-algebra joins that fold this relation against the (at
+            # scale TB-sized) triples frame plan SortMergeJoins shuffling
+            # the triples side.  Hint it broadcastable — same
+            # bounded-build-side argument as the connected_components
+            # fast path (guide §3.1).  The distributed fixpoint below stays unhinted.
             # The cap is in PAIRS, not bytes (r13 ADVICE): 500k pairs of
             # ~100-byte IRIs ≈ 100 MB framed — fine for a broadcast,
             # but ontologies with multi-KB terms would need a byte-aware

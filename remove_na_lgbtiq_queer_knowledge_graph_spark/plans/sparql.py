@@ -898,11 +898,23 @@ def _lang_col(var: str) -> str:
     return f"__lang__{var}"
 
 
-# (session id, triples frame id, prefs) → (triples frame, label dim).
-# KG frames are session-memoized (queries_sparql.kg_memo), so their ids
-# are stable for the session and the dim is shared across queries;
-# memo_get's cap bounds the pinned frames across sessions.
-_LABEL_DIM_MEMO: dict[tuple, tuple] = {}
+def _self_pair(spark, term: Term) -> DataFrame:
+    """The one-row (term, term) pair relation: a path's zero-length
+    solution at a constant anchor."""
+    return spark.range(1).select(F.lit(term[1]).alias("src"),
+                                 F.lit(term[1]).alias("dst"))
+
+
+# Relations derived from one triples frame, independent of any query's
+# constants: (session id, triples frame id, what) → (triples frame,
+# relation), where ``what`` is a label-service preference tuple (label
+# and altLabel dims) or a ("closure", step, anchors, reflexive) path
+# closure.  KG frames are session-memoized (queries_sparql.kg_memo), so
+# their ids are stable for the session and every query over the store
+# shares the relation; the value pins the frame so a recycled id() can
+# never alias a different one, and memo_get's cap bounds the pinned
+# frames across sessions.
+_STORE_MEMO: dict[tuple, tuple] = {}
 
 
 class _Compiler:
@@ -1083,7 +1095,7 @@ class _Compiler:
             pairs = self._fold_step(
                 triples, pairs, st,
                 pat.s if i == 0 else None,
-                pat.o, i == 0)
+                pat.o, i == 0, len(pat.path) == 1)
         df = pairs
         out: list[Column] = []
         for term, col in ((pat.s, "src"), (pat.o, "dst")):
@@ -1093,25 +1105,46 @@ class _Compiler:
                 df = df.filter(F.col(col) == term[1])
         return df.select(*out) if out else df.select()
 
+    def _closure(self, triples: DataFrame, st: PathStep, edges: DataFrame,
+                 s_term: Term | None, o_term: Term | None,
+                 reflexive: bool) -> DataFrame:
+        """``transitive_closure`` of one step's pair relation, memoized
+        per (session, triples frame, step, reflexive) in
+        :data:`_STORE_MEMO`.  The closure of a fixed step over a
+        session-memoized store does not depend on the query's
+        constants, so only the first text per store pays its eager
+        jobs (the ``localCheckpoint`` and the driver fast-path probe).
+        Alternation steps thread the enclosing triple's constant anchors
+        into their branches (:meth:`_step_edges`), so their key carries
+        the anchors too."""
+        anchors = (s_term, o_term) if st.alts else None
+        key = (id(triples.sparkSession), id(triples),
+               ("closure", st, anchors, reflexive))
+        return memo_get(_STORE_MEMO, key, lambda: (
+            triples, transitive_closure(edges, reflexive=reflexive)))[1]
+
     def _fold_step(self, triples: DataFrame, pairs: DataFrame | None,
                    st: PathStep, s_term: Term | None, o_term: Term | None,
-                   o_seedable: bool) -> DataFrame:
+                   o_seedable: bool, o_final: bool = False) -> DataFrame:
         """Fold one path step into the accumulated pair relation.
         ``s_term`` is the enclosing triple's subject term when this is
         the OUTER leading step (None otherwise); ``o_seedable`` marks a
-        single-step outer path whose object constant can seed the
-        zero-length solution."""
+        leading step whose object constant can seed the zero-length
+        solution; ``o_final`` marks the ONLY step of an outer path,
+        whose dst the pattern filters to a constant ``o_term``."""
         edges = self._step_edges(triples, st, s_term, o_term)
         if st.star or st.plus or st.opt:
-            # p? composes exactly like p* with the closure replaced
-            # by the single-step edges: zero-length identity ∪ one
-            # application (SPARQL 1.1 §18.4 ZeroOrOnePath)
-            plus = edges if st.opt else transitive_closure(edges)
             has_zero = st.star or st.opt
             if pairs is None:
+                # p? composes exactly like p* with the closure replaced
+                # by the single-step edges: zero-length identity ∪ one
+                # application (SPARQL 1.1 §18.4 ZeroOrOnePath)
+                plus = edges if st.opt else self._closure(
+                    triples, st, edges, s_term, o_term, reflexive=False)
                 if has_zero:
                     # leading p* / p?: the zero-length path (SPARQL
                     # 1.1 §18.4 ZeroOrMorePath / ZeroOrOnePath).
+                    spark = triples.sparkSession
                     if s_term is not None and s_term[0] != "var":
                         # Constant-anchored: §18.4's ALP evaluation
                         # starts from the anchor TERM itself, graph
@@ -1123,9 +1156,13 @@ class _Compiler:
                         # row with src ≠ anchor would die at the
                         # final src filter anyway, so the unbounded
                         # term scan is skipped entirely.
-                        zero = triples.sparkSession.range(1).select(
-                            F.lit(s_term[1]).alias("src"),
-                            F.lit(s_term[1]).alias("dst"))
+                        zero = _self_pair(spark, s_term)
+                    elif o_final and o_term[0] != "var":
+                        # `?x p? <c>` / `?x p* <c>`: the mirror case —
+                        # every identity row with dst ≠ c dies at the
+                        # final dst filter, and (c, c) is a solution
+                        # even when c is absent from the graph
+                        zero = _self_pair(spark, o_term)
                     else:
                         # Var subject (or nested position): zero-length
                         # relates every term of the graph to itself —
@@ -1142,37 +1179,54 @@ class _Compiler:
                             "src", F.col("src").alias("dst"))
                         if o_seedable and o_term is not None \
                                 and o_term[0] != "var":
-                            # `?x p? <c>` / `?x p* <c>`: the
-                            # zero-length solution ?x = c exists
-                            # even when c is absent from the graph
+                            # an object anchor absent from the graph
+                            # still has its zero-length solution
                             zero = zero.unionByName(
-                                triples.sparkSession.range(1).select(
-                                    F.lit(o_term[1]).alias("src"),
-                                    F.lit(o_term[1]).alias("dst")))
+                                _self_pair(spark, o_term))
                     pairs = zero.unionByName(plus).distinct()
                 else:
                     pairs = plus
+            elif st.star:
+                # Non-leading p*: ONE left join of the prefix pairs
+                # against the memoized reflexive closure (a distinct
+                # pair set, so prefix multiplicities ride through
+                # untouched — the bag semantics of any plain steps
+                # before this one).  A prefix dst the closure has no
+                # row for is not a node of the step's edges: its only
+                # solution is the zero-length one, dst itself —
+                # detected on the join key (b.src IS NULL), so a
+                # matched NULL dst stays NULL.  A NULL prefix dst
+                # joins nothing, as in the inner join it replaces.
+                refl = self._closure(triples, st, edges, s_term, o_term,
+                                     reflexive=True)
+                pairs = (
+                    pairs.filter(F.col("dst").isNotNull()).alias("a")
+                    .join(refl.alias("b"), F.col("a.dst") == F.col("b.src"),
+                          "left")
+                    .select(F.col("a.src").alias("src"),
+                            F.when(F.col("b.src").isNull(), F.col("a.dst"))
+                            .otherwise(F.col("b.dst")).alias("dst"))
+                )
             else:
-                # Non-leading ?/*/+ step: build the step's pair
-                # relation as a SET (§18.4 path evaluation yields
-                # distinct term pairs) and join the accumulated
-                # prefix against it — prefix multiplicities ride
-                # through the join untouched, preserving the bag
-                # semantics of any plain steps before this one.
-                # (A whole-accumulated-set distinct here would
-                # collapse duplicate solutions a plain `p/p` prefix
-                # legitimately produces.)
-                step = plus.distinct() if st.opt else plus
-                if has_zero:
+                # Non-leading p+ / p?: build the step's pair relation
+                # as a SET (§18.4 path evaluation yields distinct term
+                # pairs) and join the accumulated prefix against it —
+                # prefix multiplicities ride through the join
+                # untouched.  (A whole-accumulated-set distinct here
+                # would collapse duplicate solutions a plain `p/p`
+                # prefix legitimately produces.)
+                if st.plus:
+                    step = self._closure(triples, st, edges, s_term,
+                                         o_term, reflexive=False)
+                else:
                     # zero-length at this position relates each
-                    # incoming dst to itself; union it into the
-                    # step relation BEFORE the join so a closure
-                    # cycle (m,m) and the zero-length (m,m) count
-                    # once, not twice
+                    # incoming dst to itself; union it into the step
+                    # relation BEFORE the join so an edge (m, m) and
+                    # the zero-length (m, m) count once, not twice
                     ids = pairs.select(
                         F.col("dst").alias("src"),
                         F.col("dst").alias("dst")).distinct()
-                    step = ids.unionByName(step).distinct()
+                    step = ids.unionByName(edges).distinct()
                 pairs = (
                     pairs.alias("a")
                     .join(step.alias("b"), F.col("a.dst") == F.col("b.src"))
@@ -1212,7 +1266,13 @@ class _Compiler:
         statements collecting stats, the ANALYZE idiom); the count is
         LocalLimit-gated so a huge env costs one early-exiting partial
         scan and simply doesn't get the hint, keeping the plain
-        per-branch equi-joins that are right at scale."""
+        per-branch equi-joins that are right at scale.
+
+        It fires only when a UNION follows earlier patterns of its
+        group, so an outer env fans out over its branches; no
+        ``kg_query`` template has that shape, so it costs that workload
+        nothing.  It cannot join the per-store memo: env depends on the
+        query's constants, and its size is what the hint decides on."""
         try:
             n = env.limit(self._ENV_BCAST_ROWS + 1).count()
         except Exception:  # noqa: BLE001 — probe must never break compile
@@ -1799,7 +1859,10 @@ class _Compiler:
             elif isinstance(item, BindPat):
                 col = self._expr(item.expr, env)
                 if env is None:
-                    env = self.triples.sparkSession.range(1).select(
+                    # one-row inline table, not range(1): it plans as a
+                    # LocalRelation, whose broadcast into the next
+                    # pattern's join runs no Spark job
+                    env = self.triples.sparkSession.sql("VALUES (0)").select(
                         col.alias(item.var))
                 elif item.var in env.columns:
                     # BIND on an in-scope variable is a SPARQL syntax
@@ -1824,15 +1887,20 @@ class _Compiler:
                 # replaced a fail-loud NotImplementedError; before that
                 # the bare lexical match crossed tags silently).  A
                 # var needs lang-aware matching when any of its cells
-                # is tagged OR the env tracks a __lang__ companion for
-                # it — otherwise the bare-value paths below are exact.
+                # is tagged, the env tracks a __lang__ companion for it,
+                # or the store has a lang column — a later pattern may
+                # bind the var as a tagged object, and a companion-less
+                # VALUES binding would then join on the lexical value
+                # alone (a plain "Alice" matched "Alice"@en).  Otherwise
+                # the bare-value paths below are exact.
                 row_langs = [
                     tuple(t[2] if (t[0] == "lit" and len(t) > 2)
                           else None for t in r)
                     for r in item.rows]
                 lang_vars = {
                     v for i, v in enumerate(item.vars)
-                    if any(r[i] is not None for r in row_langs)
+                    if self.has_lang
+                    or any(r[i] is not None for r in row_langs)
                     or (env is not None and _lang_col(v) in env.columns)
                 }
                 shared = ([v for v in item.vars if v in env.columns]
@@ -2120,7 +2188,7 @@ class _Compiler:
             # to a new object
             return self.triples, dim
 
-        return memo_get(_LABEL_DIM_MEMO, key, build)[1]
+        return memo_get(_STORE_MEMO, key, build)[1]
 
     def _alt_label_dim(self, prefs: tuple[str, ...]) -> DataFrame:
         """The (subject, aliases) dimension for ``?xAltLabel``:
@@ -2159,7 +2227,7 @@ class _Compiler:
             )
             return self.triples, dim
 
-        return memo_get(_LABEL_DIM_MEMO, key, build)[1]
+        return memo_get(_STORE_MEMO, key, build)[1]
 
     def _attach_alt_label(self, env: DataFrame, base_var: str,
                           alt_var: str) -> DataFrame:

@@ -28,6 +28,13 @@ def get_spark(app_name: str = "remove_na_kg_spark") -> SparkSession:
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        # PySpark wraps every DataFrame/Column call in a call-site
+        # capture: a Python stack walk plus ~4 py4j round trips per
+        # call, and the SPARQL compiler makes hundreds of calls per
+        # text.  Off, runtime errors lose the Python file:line
+        # DataFrame context (the JVM error itself is unchanged).  Set
+        # here, not later: PySpark caches the flag on its first read.
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

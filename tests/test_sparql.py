@@ -5,7 +5,10 @@ over a big verbatim reference query."""
 
 from __future__ import annotations
 
+from collections import Counter
+
 import pytest
+from pyspark.sql import functions as F
 
 from remove_na_lgbtiq_queer_knowledge_graph_spark.plans.sparql import (
     RDF_TYPE,
@@ -1773,3 +1776,133 @@ SELECT ?p1 ?x ?p2 ?y WHERE {
     got = compile_sparql(text, kg).collect()
     assert got
     assert sorted(got) == sorted(compile_sparql(text, flat).collect())
+
+
+# -- anchor-seeded p?/p*, the left-joined non-leading p*, the closure memo --
+
+_EX = "http://ex.org/"
+
+
+def _graph_frame(spark, graph):
+    return spark.createDataFrame(
+        [(_EX + s, _EX + p, None if o is None else _EX + o, None, None)
+         for s, p, o in graph],
+        "subject string, predicate string, object string, "
+        "lang string, dtype string")
+
+
+def _ref_pairs(path_ast, graph):
+    """Reference (src, dst) bag of a path over the graph, from the
+    property suite's independent §18.4 evaluator."""
+    from test_sparql_paths_property import ref_eval
+
+    return Counter({(_EX + a, _EX + b): n
+                    for (a, b), n in ref_eval(path_ast, graph).items()})
+
+
+_ANCHOR_GRAPH = [("a", "p", "b"), ("b", "p", "c"), ("c", "p", "b"),
+                 ("d", "q", "a")]
+
+
+@pytest.mark.parametrize("mod", ["?", "*"])
+@pytest.mark.parametrize("anchor", ["c", "a", "ghost"])
+def test_object_anchored_zero_admitting_path(spark, mod, anchor):
+    """``?x p? <c>`` / ``?x p* <c>`` seed only the anchor's self-pair;
+    the answers must equal the reference relation filtered to dst = c,
+    plus the zero-length (c, c) that exists even when c is absent from
+    the graph."""
+    t = _graph_frame(spark, _ANCHOR_GRAPH)
+    ref = _ref_pairs(("mod", ("link", "p"), mod), _ANCHOR_GRAPH)
+    c = _EX + anchor
+    want = Counter({(s,) for (s, d) in ref if d == c} | {(c,)})
+    df = compile_sparql(
+        _PFX + f"SELECT ?x WHERE {{ ?x ex:p{mod} ex:{anchor} . }}", t)
+    assert Counter((r["x"],) for r in df.collect()) == want
+    # constant subject and object: the pair is a solution iff the
+    # reference has it, or both ends are the same term (zero length)
+    for subj in ("a", "c", anchor):
+        df = compile_sparql(
+            _PFX + f"ASK {{ ex:{subj} ex:p{mod} ex:{anchor} . }}", t)
+        expect = (_EX + subj, c) in ref or subj == anchor
+        assert [tuple(r) for r in df.collect()] == [(expect,)], subj
+
+
+def test_non_leading_star_cycle_bags_and_unmatched_dst(spark):
+    """``q/p*`` with a p-cycle, a prefix dst outside p's edges (its only
+    solution is the zero-length one) and a duplicated prefix triple
+    (its solutions count twice) — the bag must equal the reference
+    evaluator's."""
+    graph = [("x", "q", "a"), ("x", "q", "a"), ("y", "q", "e"),
+             ("z", "q", "b"),
+             ("a", "p", "b"), ("b", "p", "c"), ("c", "p", "b")]
+    t = _graph_frame(spark, graph)
+    want = _ref_pairs(("seq", (("link", "q"),
+                               ("mod", ("link", "p"), "*"))), graph)
+    df = compile_sparql(_PFX + "SELECT ?s ?o WHERE { ?s ex:q/ex:p* ?o . }", t)
+    assert Counter((r["s"], r["o"]) for r in df.collect()) == want
+    assert want[(_EX + "x", _EX + "b")] == 2
+    assert want[(_EX + "y", _EX + "e")] == 1
+
+
+def test_non_leading_star_null_endpoints(spark):
+    """Triples frames that come out of a left join (an OPTIONAL
+    upstream) carry NULL objects.  A NULL prefix dst joins nothing,
+    while a p-edge's NULL dst stays a NULL solution."""
+    links = spark.createDataFrame(
+        [("x", "q", 1), ("w", "q", 2), ("z", "q", 3), ("a", "p", 3),
+         ("b", "p", 4)],
+        "s string, p string, k int")
+    objs = spark.createDataFrame([(1, "a"), (3, "b")], "k int, o string")
+    t = (links.join(objs, "k", "left")
+         .select(F.concat(F.lit(_EX), "s").alias("subject"),
+                 F.concat(F.lit(_EX), "p").alias("predicate"),
+                 F.concat(F.lit(_EX), "o").alias("object"),
+                 F.lit(None).cast("string").alias("lang"),
+                 F.lit(None).cast("string").alias("dtype")))
+    df = compile_sparql(_PFX + "SELECT ?s ?o WHERE { ?s ex:q/ex:p* ?o . }", t)
+    got = Counter((r["s"], r["o"]) for r in df.collect())
+    # w's q-edge has a NULL dst: no solution.  z reaches b, whose p-edge
+    # has a NULL dst: that NULL is a solution of z's, not of x's (a
+    # NULL is no term, so the closure does not walk through it)
+    assert got == Counter({(_EX + "x", _EX + "a"): 1,
+                           (_EX + "x", _EX + "b"): 1,
+                           (_EX + "z", _EX + "b"): 1,
+                           (_EX + "z", None): 1})
+
+
+def test_closure_memo_one_build_per_store(spark, monkeypatch):
+    """Two closure texts over one store build the step's closure once;
+    a second store gets its own entry."""
+    from remove_na_lgbtiq_queer_knowledge_graph_spark.plans import sparql
+
+    calls = []
+    real = sparql.transitive_closure
+
+    def counting(edges, **kw):
+        calls.append(kw)
+        return real(edges, **kw)
+
+    monkeypatch.setattr(sparql, "transitive_closure", counting)
+    text = _PFX + "SELECT ?s ?o WHERE {{ ?s ex:q/ex:p* ?o . ?s ex:q ex:{} }}"
+    one = _graph_frame(spark, [("x", "q", "a"), ("a", "p", "b")])
+    two = _graph_frame(spark, [("x", "q", "a"), ("a", "p", "c")])
+    assert _vals(compile_sparql(text.format("a"), one), "o") == [
+        (_EX + "a",), (_EX + "b",)]
+    assert _vals(compile_sparql(text.format("b"), one), "o") == []
+    assert calls == [{"reflexive": True}]
+    assert _vals(compile_sparql(text.format("a"), two), "o") == [
+        (_EX + "a",), (_EX + "c",)]
+    assert len(calls) == 2
+
+
+@pytest.mark.parametrize("values_first", [True, False])
+def test_values_plain_literal_does_not_match_tagged(triples, values_first):
+    """RDF term equality includes the tag wherever VALUES sits in the
+    group: a plain "Alice" is not "Alice"@en, a tagged cell is."""
+    for cell, want in (('"Alice"', []),
+                       ('"Alice"@en', [("http://ex.org/a",)])):
+        values = f"VALUES ?l {{ {cell} }}"
+        pat = "?s rdfs:label ?l ."
+        body = f"{values} {pat}" if values_first else f"{pat} {values}"
+        df = compile_sparql(_PFX + f"SELECT ?s WHERE {{ {body} }}", triples)
+        assert _vals(df, "s") == want, (cell, body)
